@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** Per-round benchmark main. Runs the headline queries on
   * SPARK_GRAFT_SF_DIR and prints one JSON line. Headline set = the
@@ -196,7 +197,7 @@ object Bench {
     try {
       val src = scala.io.Source.fromFile("/proc/loadavg")
       try src.mkString.trim.split("\\s+")(0).toDouble finally src.close()
-    } catch { case _: Throwable => -1.0 }
+    } catch { case NonFatal(_) => -1.0 }
 
   /** Locale-independent fixed-point formatting: the f-interpolator uses
     * the default locale, which renders 0.043 as "0,043" on a comma-
@@ -247,7 +248,7 @@ object Bench {
       try {
         if (t == "events") spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         spark.read.parquet(s"$sfDir/$t.parquet").count()
-      } catch { case _: Throwable => }
+      } catch { case NonFatal(_) => }
     }
     // min of N runs per query: single-shot numbers at these absolute times
     // (sub-second per query) are dominated by JIT/GC noise — the r3→r4
@@ -272,7 +273,7 @@ object Bench {
     (0 until warmupPasses).foreach { _ =>
       (headline ++ extended).filter(qs.contains).foreach { name =>
         try qs(name)(spark, sfDir).count()
-        catch { case _: Throwable => () } // the timed loop reports it
+        catch { case NonFatal(_) => () } // the timed loop reports it
       }
     }
     // a query that crashes is NOT a fast query: time only successful
@@ -286,7 +287,7 @@ object Bench {
         val t0 = System.nanoTime()
         val ok =
           try { qs(name)(spark, sfDir).count(); true }
-          catch { case e: Throwable =>
+          catch { case NonFatal(e) =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
             nFail += 1
             false
@@ -346,7 +347,7 @@ object Bench {
       val w = new java.io.PrintWriter(
         new java.io.File("bench_out.json"), "UTF-8")
       try w.println(jsonLine) finally w.close()
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] bench_out.json write failed: ${e.getMessage}")
     }
     spark.stop()

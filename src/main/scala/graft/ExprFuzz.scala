@@ -2,6 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.expr.Expressions
+import scala.util.control.NonFatal
 /** P4 expression-language fuzz driver: evaluates every input expression
   * over a deterministic 200-row lineitem slice and writes the raw double
   * results (one column per expression) to parquet for an external
@@ -20,7 +21,7 @@ object ExprFuzz {
       col("l_suppkey"), col("l_quantity"), col("l_extendedprice")) ++
       exprs.zipWithIndex.map { case (e, i) =>
         (try Expressions.compile(li, e).cast("double")
-         catch { case _: Throwable => lit(null).cast("double") }).as(s"e$i")
+         catch { case NonFatal(_) => lit(null).cast("double") }).as(s"e$i")
       }
     li.select(cols: _*).coalesce(1).write.mode("overwrite").parquet(args(1))
     spark.stop()

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** r21 optimization probe: time a SELECTED set of bench queries with the
   * EXACT session config and min-of-N methodology of [[Bench]], without
@@ -32,7 +33,7 @@ object OptProbe {
       try {
         if (t == "events") spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         spark.read.parquet(s"$sfDir/$t.parquet").count()
-      } catch { case _: Throwable => }
+      } catch { case NonFatal(_) => }
     }
     // the bench times OPERATOR overrides for three entries (pivot
     // betweenness, HLL hyperball, raw minhash) — probe the same thing
@@ -44,7 +45,7 @@ object OptProbe {
       s"OptProbe: unknown query name(s): ${unknown.mkString(", ")}")
     val names = args.filter(qs.contains)
     // one discarded warmup pass (the Bench protocol)
-    names.foreach { n => try qs(n)(spark, sfDir).count() catch { case _: Throwable => () } }
+    names.foreach { n => try qs(n)(spark, sfDir).count() catch { case NonFatal(_) => () } }
     val out = names.map { name =>
       spark.sparkContext.setJobDescription(name)
       val times = (0 until iters).map { _ =>

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** r21 plan-artifact dumper: writes the `.explain("formatted")` output of
   * each named query's FINAL frame to `<outDir>/<name>_<tag>.txt` — the
@@ -38,7 +39,7 @@ object PlanDump {
             txt)
         System.err.println(s"[plandump] wrote $n")
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           System.err.println(s"[plandump] $n FAILED: ${e.getMessage}")
       }
     }

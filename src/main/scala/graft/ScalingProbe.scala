@@ -498,11 +498,11 @@ object ScalingProbe {
       val (edges, _) = denseEdges(d)
       graft.ops.Graph.kCore(edges, "src", "dst", k = 5).count()
     }
-    // connected components on the WORST round-count shape for the star
-    // alternation — long chains (residue classes mod 7 over the dense id
-    // range; 8x data makes the chains 8x LONGER, so this also probes the
-    // O(log^2 n) round bound, the property that beats label flooding's
-    // O(diameter)); two bridges keep the merge logic on the path
+    // connected components on the WORST round-count shape — long chains
+    // (residue classes mod 7 over the dense id range; 8x data makes the
+    // chains 8x LONGER, so this also probes FastSV's logarithmic round
+    // bound, the property that beats label flooding's O(diameter)); two
+    // bridges keep the merge logic on the path
     time("components") { d =>
       import org.apache.spark.sql.expressions.Window
       val nodes = spark.read.parquet(s"$d/documents.parquet")

@@ -1256,7 +1256,7 @@ FROM nodes n LEFT JOIN bc ON bc.v = n.node ORDER BY n.node"""
         "clique_in_core" -> (col("n_clique") === 6))
     }),
 
-    // connected components via alternating large-star/small-star on the
+    // connected components via FastSV parent-pointer rounds on the
     // multi-component residue-chain graph; labels are component minima;
     // oracle = DuckDB recursive-CTE min-label flooding over the
     // symmetric closure, exact

@@ -3,11 +3,10 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** r21 step-plan dumper: the PER-ITERATION / PER-ROUND plans of the
-  * iterative operators (what actually changed this round — the final
-  * frames PlanDump writes are checkpoint scans). Run with tag
-  * "after" in the optimized tree; the before tree carries an adapted
-  * copy reproducing the r20 step shapes. Broadcast is DISABLED so the
+/** Step-plan dumper: the PER-ITERATION / PER-ROUND plans of the
+  * iterative operators (the final frames PlanDump writes are checkpoint
+  * scans). Usage: `runMain graft.StepPlanDump <outDir> <tag>`; each plan
+  * lands in `<outDir>/<step>_<tag>.txt`. Broadcast is DISABLED so the
   * dumped shapes are the 100 TB ones (at scale nothing here broadcasts).
   */
 object StepPlanDump {
@@ -57,15 +56,12 @@ object StepPlanDump {
       e.unpersist(false)
     }
 
-    // connected components: one FastSV round (r22 — jumps + hook); the
-    // r21 star round is kept alongside as the A/B baseline artifact
+    // connected components: one FastSV round (jumps + hook)
     locally {
       val cg = nodes.filter(col("node") + 7 < nMod)
         .select(col("node").as("src"), (col("node") + lit(7L)).as("dst"))
       val e0 = cg.select(greatest(col("src"), col("dst")).as("u"),
         least(col("src"), col("dst")).as("v")).distinct().localCheckpoint()
-      write("components_star_round", ops.Graph.starRound(e0),
-        "r21 baseline: one large-star + small-star round (window form)")
       val adj = e0.union(e0.select(col("v").as("u"), col("u").as("v")))
         .union(nodes.select(col("node").as("u"), col("node").as("v")))
         .repartition(col("u"))
@@ -77,8 +73,7 @@ object StepPlanDump {
       adj.unpersist(false)
     }
 
-    // hits: one auth half-step (r22 = fused contribution+carry fold; the
-    // r21 update-join shape is kept alongside as the baseline artifact)
+    // hits: one auth half-step (fused contribution+carry fold)
     locally {
       val simple = edges.filter(col("src") =!= col("dst")).distinct()
       val eSrc = simple.repartition(col("src"))
@@ -87,16 +82,6 @@ object StepPlanDump {
       val state = simple.select(col("src").as("node")).distinct()
         .withColumn("hub", lit(1.0)).withColumn("auth", lit(1.0))
         .localCheckpoint()
-      val oldAuthNext = eSrc
-        .join(state.select(col("node").as("src"), col("hub")), "src")
-        .groupBy("dst").agg(sum("hub").as("__a"))
-      val oldHalfStep = state.select("node", "hub")
-        .join(oldAuthNext.select(col("dst").as("node"), col("__a")),
-          Seq("node"), "left")
-        .select(col("node"), col("hub"),
-          coalesce(col("__a"), lit(0.0)).as("auth"))
-      write("hits_half_step_r21", oldHalfStep,
-        "r21 baseline: auth aggregate THEN left-outer update join")
       write("hits_half_step", ops.Graph.hitsAuthStep(eSrc, state),
         "one fused auth half-step: contribution+carry fold, no update join")
       eSrc.unpersist(false)

@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -42,7 +43,7 @@ object Verify {
         System.err.println(
           f"[verify] done $name in ${(System.nanoTime() - t0) / 1e9}%.1f s")
       }
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
         System.err.println(s"[verify] $name failed: $msg")
         errors(name) = msg

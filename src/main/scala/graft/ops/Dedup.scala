@@ -985,46 +985,18 @@ object Dedup {
     * clustering step that follows the pair generators in a dedup pipeline
     * (pairs say "a dups b"; the pipeline needs "keep ONE representative
     * per duplicate cluster", which is the component representative).
+    * Returns (id, rep) with rep = min id in the component.
     *
-    * Min-label propagation to a fixpoint: each iteration is one shuffle
-    * (edge join + min agg) and lineage is cut with localCheckpoint so the
-    * loop costs iterations × one join, not exponential plan growth.
-    * Converges in O(component diameter) iterations — dup clusters are
-    * near-cliques from LSH pairs, so diameter is small; long-chain
-    * general graphs belong to [[graft.ops.Graph.connectedComponents]]
-    * (the O(log² n)-round large-star/small-star form — GraphSpec pins
-    * that the two implementations agree). Returns (id, rep) with
-    * rep = min id in the component.
+    * [[graft.ops.Graph.connectedComponents]] with `jumps = 0`: min-label
+    * flooding over the closed adjacency, one edge join + min aggregate
+    * per round. Dup clusters are near-cliques from LSH pairs, so their
+    * diameter, and with it the round count, is small without pointer
+    * jumps.
     */
-  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-                          maxIter: Int = 25): DataFrame = {
-    val fwd = pairs.select(col(aCol).cast("long").as("src"),
-      col(bCol).cast("long").as("dst"))
-    val edges = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint()
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("rep", col("id")).localCheckpoint()
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val nbr = edges
-        .join(labels.select(col("id").as("dst"), col("rep").as("nrep")), "dst")
-        .groupBy(col("src").as("id")).agg(min("nrep").as("nbrRep"))
-      // the prev rep RIDES the update row (r21), so convergence is a
-      // filter over the lazily-checkpointed step output — its isEmpty
-      // probe is the materializing action; the old shape paid an eager
-      // checkpoint job PLUS an old-vs-new join per iteration
-      val next = labels.join(nbr, Seq("id"), "left")
-        .select(col("id"), col("rep").as("__prev"),
-          least(col("rep"), coalesce(col("nbrRep"), col("rep"))).as("rep"))
-        .localCheckpoint(false)
-      converged = next.filter(col("rep") =!= col("__prev")).isEmpty
-      labels = next.select(col("id"), col("rep"))
-      iter += 1
-    }
-    require(converged, s"connectedComponents did not converge in $maxIter iterations")
-    labels
-  }
+  def connectedComponents(pairs: DataFrame, aCol: String,
+                          bCol: String): DataFrame =
+    Graph.connectedComponents(pairs, aCol, bCol, jumps = 0)
+      .select(col("node").as("id"), col("component").as("rep"))
 
   /** Collapse duplicate clusters to one document each and return the
     * curated corpus: every document untouched by `pairs`, plus the best

@@ -21,6 +21,42 @@ import org.apache.spark.storage.StorageLevel
   */
 object Graph {
 
+  /** The ONE loop behind every graph operator that iterates until its
+    * state stops changing: apply `step` from `init` round by round. Each
+    * round's `step(state)` is lazily localCheckpointed (the plan is
+    * truncated to one round), and one aggregate, the round's signature
+    * (row count + `bit_xor(xxhash64(all columns))`), is the one action
+    * that materializes it. The loop stops when the signature repeats
+    * (that confirming round is counted), when the state is empty, or
+    * after `maxRounds` rounds (0 is allowed: `init` comes back as is).
+    * Returns (state, rounds, converged).
+    *
+    * Invariants the callers rely on: `step` is total, its output has
+    * `init`'s columns in the same order, and it maps an empty state to an
+    * empty state, so an empty state is a fixpoint and needs no round.
+    * The helper never refuses: a caller whose unconverged state is not a
+    * valid answer checks `converged` with its own message. */
+  private[graft] def fixpoint(init: DataFrame, maxRounds: Int)(
+      step: DataFrame => DataFrame): (DataFrame, Int, Boolean) = {
+    def countAndHash(df: DataFrame): (Long, Long) = {
+      val r = df.agg(count(lit(1)),
+        coalesce(bit_xor(xxhash64(df.columns.toSeq.map(col): _*)),
+          lit(0L))).head()
+      (r.getLong(0), r.getLong(1))
+    }
+    var state = init
+    var sig = countAndHash(state)
+    var rounds = 0
+    var converged = sig._1 == 0
+    while (!converged && rounds < maxRounds) {
+      val next = step(state).localCheckpoint(false)
+      val sig2 = countAndHash(next)
+      converged = sig2 == sig || sig2._1 == 0
+      state = next; sig = sig2; rounds += 1
+    }
+    (state, rounds, converged)
+  }
+
   /** Standard damped PageRank, up to `iters` synchronous iterations from
     * the uniform start:
     * {{{ r'(v) = (1-d)/N + d * ( Σ_{(s,v)∈E} r(s)/deg(s) + dangling/N ) }}}
@@ -432,40 +468,26 @@ object Graph {
     * Scale shape: round-synchronous support peel — each round is one
     * [[trianglesOf]] pass (degree-ordered wedge join, O(m^1.5)
     * skew-proof) + one per-edge aggregate + one filter on the CURRENT
-    * edge set, which only shrinks; convergence by the count+hash
-    * checksum, localCheckpoint truncation, O(1) driver state per round
-    * (the kCore discipline). Exhaustion REFUSES loudly — an un-peeled
-    * superset is not a truss.
+    * edge set, which only shrinks; rounds run through [[fixpoint]].
+    * Exhaustion REFUSES loudly — an un-peeled superset is not a truss.
     */
   def kTruss(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
              maxRounds: Int = 100): DataFrame = {
     require(k >= 2, s"kTruss: k must be >= 2: $k")
     require(maxRounds >= 1, s"kTruss: maxRounds must be >= 1: $maxRounds")
-    var e = undirected(edges, srcCol, dstCol).localCheckpoint()
-    def sig(df: DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)),
-        coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-    var (cnt, chk) = sig(e)
-    var rounds = 0
-    var stable = cnt == 0
     // the stable round's support was computed over an edge set the
     // filter then left UNCHANGED — reuse it for the output instead of
     // paying the O(m^1.5) wedge pass once more after convergence
     var lastSup: Option[DataFrame] = None
-    while (!stable && rounds < maxRounds) {
-      val sup = edgeSupport(e).localCheckpoint()
-      val next = e.join(sup, Seq("u", "v"), "left")
+    val (e, _, converged) = fixpoint(
+        undirected(edges, srcCol, dstCol).localCheckpoint(), maxRounds) { cur =>
+      val sup = edgeSupport(cur).localCheckpoint()
+      lastSup = Some(sup)
+      cur.join(sup, Seq("u", "v"), "left")
         .filter(coalesce(col("support"), lit(0L)) >= k - 2)
         .select("u", "v")
-        .localCheckpoint()
-      val (c2, k2) = sig(next)
-      stable = c2 == cnt && k2 == chk
-      cnt = c2; chk = k2; e = next; rounds += 1
-      lastSup = Some(sup)
     }
-    require(stable || cnt == 0,
+    require(converged,
       s"kTruss: peel did not stabilize within $maxRounds rounds " +
         "(pathological peel depth — raise maxRounds)")
     e.join(lastSup.getOrElse(edgeSupport(e)), Seq("u", "v"), "left")
@@ -802,142 +824,23 @@ object Graph {
     require(k >= 1, s"k must be >= 1: $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1: $maxRounds")
     val und = undirected(edges, srcCol, dstCol)
-    var sym = und.select(col("u").as("z"), col("v").as("n"))
-      .union(und.select(col("v").as("z"), col("u").as("n")))
-      .localCheckpoint()
-    var m = sym.count()
-    var rounds = 0
-    var stable = false
-    while (!stable && rounds < maxRounds && m > 0) {
-      val keep = sym.groupBy("z").agg(count(lit(1)).as("__d"))
+    val (sym, _, converged) = fixpoint(
+        und.select(col("u").as("z"), col("v").as("n"))
+          .union(und.select(col("v").as("z"), col("u").as("n")))
+          .localCheckpoint(), maxRounds) { cur =>
+      val keep = cur.groupBy("z").agg(count(lit(1)).as("__d"))
         .filter(col("__d") >= k).select("z")
-      // LAZY checkpoint (r21): the count below is the materializing
-      // action — one job per peel round instead of two
-      val next = sym.join(keep, Seq("z"), "left_semi")
+      cur.join(keep, Seq("z"), "left_semi")
         .join(keep.withColumnRenamed("z", "n"), Seq("n"), "left_semi")
         .select("z", "n")
-        .localCheckpoint(false)
-      val m2 = next.count()
-      stable = m2 == m
-      m = m2
-      sym = next
-      rounds += 1
     }
     // an un-peeled superset is NOT a k-core — refuse loudly rather than
     // return a silently-wrong membership when the cap cuts the peel
-    require(stable || m == 0,
+    require(converged,
       s"kCore: peel did not stabilize within $maxRounds rounds " +
         "(pathological peel depth — raise maxRounds)")
     sym.groupBy(col("z").as("node"))
       .agg(count(lit(1)).as("core_degree"))
-  }
-
-  /** One large-star round (Kiveris et al. 2014, "Connected Components in
-    * MapReduce and Beyond"): every node a connects each STRICTLY LARGER
-    * neighbor to the minimum of its closed neighborhood. Input and
-    * output rows are (u, v) with u > v — the child-points-to-smaller
-    * orientation both star ops preserve.
-    *
-    * The output is a BAG, not a set (r21): the trailing distinct was
-    * dropped because the only consumer is [[smallStar]], whose min
-    * aggregate is duplicate-indifferent (map-side partial aggregation
-    * dedups per input partition anyway) and whose own terminal distinct
-    * restores set semantics for the round — one exchange per round
-    * saved for identical round output. Duplicate (v, m) rows arise when
-    * several neighbors of v share a closed-neighborhood minimum, which
-    * is ALSO the case the old distinct's map-side partial dedup
-    * collapsed before its shuffle, so the shuffled-byte story at scale
-    * is unchanged to first order.
-    *
-    * r21 shape: the per-neighborhood minimum rides a window aggregate
-    * (min over partition u, no ORDER BY) instead of the r14–r20
-    * groupBy-min + self-join — each row needs its OWN group's scalar
-    * back, which is exactly a partition-frame window: ONE exchange +
-    * one sort per star instead of an exchange, a join, and two
-    * merge-sorts, with ~30% measured round-cost reduction and identical
-    * output. Skew story unchanged: a hot neighborhood concentrates on
-    * one task either way (join probe side before, spillable window
-    * buffer now — ExternalAppendOnlyUnsafeRowArray spills to disk). */
-  private def largeStar(e: DataFrame): DataFrame = {
-    val sym = e.select(col("u"), col("v"))
-      .union(e.select(col("v").as("u"), col("u").as("v")))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("u")
-    sym.withColumn("__m", least(col("u"), min(col("v")).over(w)))
-      .filter(col("v") > col("u"))
-      .select(col("v").as("u"), col("__m").as("v"))
-  }
-
-  /** One small-star round: every node a connects its SMALLER-OR-EQUAL
-    * neighbors (and itself) to the minimum among them. Preserves the
-    * (u > v) orientation. Same one-exchange window shape as
-    * [[largeStar]]; the self row (u, m) is emitted per input row rather
-    * than per group — the terminal distinct collapses the difference. */
-  private def smallStar(e: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("u")
-    val withM = e.withColumn("__m", min(col("v")).over(w))
-    withM.filter(col("v") =!= col("__m"))
-      .select(col("v").as("u"), col("__m").as("v"))
-      .union(withM.select(col("u"), col("__m").as("v")))
-      .distinct()
-  }
-
-  /** One alternating round (small-star ∘ large-star) — the loop body of
-    * [[ccAlternatingStar]], exposed `private[graft]` so the plan
-    * artifacts and the probe baseline pin the r21 round shape. */
-  private[graft] def starRound(e: DataFrame): DataFrame =
-    smallStar(largeStar(e))
-
-  /** The r14–r21 production components loop (alternating large-star /
-    * small-star, Kiveris et al. 2014), kept `private[graft]` as the
-    * measured A/B baseline for [[connectedComponents]]' r22 FastSV
-    * replacement (ComponentsProbe): same canonical min-labeling output,
-    * ~2× label-reach per round and two edge-sized window passes plus a
-    * distinct per round, ~11 rounds / 2.6–2.8 s on the sf0.1 bench chain
-    * graph versus FastSV's ~5 rounds / 1.5 s. */
-  private[graft] def ccAlternatingStar(edges: DataFrame, srcCol: String,
-                                       dstCol: String,
-                                       maxRounds: Int = 50): DataFrame = {
-    require(maxRounds >= 1, s"maxRounds must be >= 1: $maxRounds")
-    val raw = edges.select(col(srcCol).cast("long").as("a"),
-        col(dstCol).cast("long").as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull)
-    // nodes come from the RAW list so a self-loop-only node still gets
-    // its singleton row; the star rounds run on the simple graph
-    // LAZY checkpoints throughout (r21): every round's convergence
-    // signature is the materializing action, so checkpoint + signature
-    // cost ONE job per round instead of two (the nodes frame has no
-    // action of its own until the final join and stays lazy too); the
-    // Catalyst plan is truncated at creation either way
-    val nodes = raw.select(col("a").as("node"))
-      .union(raw.select(col("b").as("node"))).distinct()
-      .localCheckpoint(false)
-    var e = raw.filter(col("a") =!= col("b"))
-      .select(greatest(col("a"), col("b")).as("u"),
-        least(col("a"), col("b")).as("v"))
-      .distinct()
-      .localCheckpoint(false)
-    def sig(df: DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)),
-        coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-    var (cnt, chk) = sig(e)
-    var rounds = 0
-    var stable = cnt == 0
-    while (!stable && rounds < maxRounds) {
-      val next = starRound(e).localCheckpoint(false)
-      val (c2, k2) = sig(next)
-      stable = c2 == cnt && k2 == chk
-      cnt = c2; chk = k2; e = next; rounds += 1
-    }
-    // an unconverged edge set is NOT a star assignment — refuse loudly
-    // (the kCore contract) rather than return wrong components
-    require(stable,
-      s"connectedComponents: did not converge within $maxRounds rounds")
-    nodes.join(e.select(col("u").as("node"), col("v").as("__c")),
-        Seq("node"), "left")
-      .select(col("node"),
-        coalesce(col("__c"), col("node")).as("component"))
   }
 
   /** Connected components of the UNDIRECTED simple graph (direction,
@@ -945,16 +848,13 @@ object Graph {
     * every node of the edge list, where `component` is the SMALLEST node
     * id in the node's component — the canonical deterministic label.
     * Nodes whose every edge is a self-loop are their own singleton
-    * component. Identical output to the r14–r21 [[ccAlternatingStar]]
-    * (the min labeling is algorithm-independent); the r22 loop is the
-    * FastSV shape below, measured 1.7× faster on the sf0.1 bench chain
-    * graph (2.61 → 1.54 s same-session min-of-5) at 5 rounds versus 11.
+    * component.
     *
-    * Scale shape (r22): FastSV-style parent-pointer rounds
-    * (Shiloach–Vishkin lineage; Azad & Buluç 2019 "FastSV"). State is
-    * one (node, f) row per node with the invariants f(v) <= v and
-    * f(v) ∈ component(v); each round applies `jumps` pointer-jump
-    * (shortcut) compositions and then one closed-neighborhood min-hook
+    * Scale shape: FastSV-style parent-pointer rounds (Shiloach–Vishkin
+    * lineage; Azad & Buluç 2019 "FastSV"). State is one (node, f) row per
+    * node with the invariants f(v) <= v and f(v) ∈ component(v); each
+    * round applies `jumps` pointer-jump (shortcut) compositions and then
+    * one closed-neighborhood min-hook
     * {{{ f'(v) = min_{u ∈ N(v) ∪ {v}} g(u) }}}
     * via the ONCE-cached u-partitioned closed symmetric adjacency (the
     * lpaSetup shape), so g is consumed exactly once per round and no
@@ -967,22 +867,20 @@ object Graph {
     * monotone non-increasing and bounded below by the component
     * minimum; a fixpoint forces f idempotent and constant per
     * component, i.e. the canonical min labeling. Per-round label reach
-    * multiplies by ~(jumps+2) versus the star loop's ~2, so rounds are
-    * ~log_{jumps+2}(diameter): at 100 TB the EDGE frame is shuffled
-    * once per round (the hook; the star round paid two edge-sized
-    * window passes plus a distinct per round) and each jump join moves
-    * only the node-sized pointer frame. `jumps = 4` is the measured
-    * sf0.1 knee (2/3/4/5/6 probed: 1.88/1.83/1.54/1.53/2.16 s);
-    * convergence is the xxhash64 bit_xor signature discipline, lazy
-    * localCheckpoints truncate per-round plans (the signature is the
-    * one materializing job per round). */
+    * multiplies by ~(jumps+2), so rounds are ~log_{jumps+2}(diameter):
+    * the EDGE frame is shuffled once per round (the hook) and each jump
+    * join moves only the node-sized pointer frame. `jumps = 0` is plain
+    * min-label flooding, O(diameter) rounds with no jump joins — enough
+    * on small-diameter graphs such as dedup clusters
+    * ([[Dedup.connectedComponents]]); `jumps = 4` is the measured knee
+    * on the sf0.1 bench chain graph. Rounds run through [[fixpoint]];
+    * exhaustion refuses. */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
                           maxRounds: Int = 50, jumps: Int = 4): DataFrame =
     ccFastSVCore(edges, srcCol, dstCol, jumps, maxRounds)._1
 
-  /** [[connectedComponents]] plus the number of rounds actually run —
-    * exposed so tests pin the round-count win (the r22 rationale) and
-    * the probes log it. */
+  /** [[connectedComponents]] plus the number of rounds actually run,
+    * the confirming round included — exposed so tests pin it. */
   private[graft] def ccFastSVCore(edges: DataFrame, srcCol: String,
                                   dstCol: String, jumps: Int,
                                   maxRounds: Int): (DataFrame, Int) = {
@@ -1006,23 +904,10 @@ object Graph {
       .repartition(col("u"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      var f = nodes.select(col("node"), col("node").as("f"))
-        .localCheckpoint(false)
-      def sig(df: DataFrame): Long = {
-        val r = df.agg(
-          coalesce(expr("bit_xor(xxhash64(node, f))"), lit(0L))).head()
-        r.getLong(0)
-      }
-      var chk = sig(f)
-      var rounds = 0
-      var stable = false
-      while (!stable && rounds < maxRounds) {
-        val next = fastSVRound(adj, f, jumps).localCheckpoint(false)
-        val k2 = sig(next)
-        stable = k2 == chk
-        chk = k2; f = next; rounds += 1
-      }
-      require(stable,
+      val (f, rounds, converged) = fixpoint(
+          nodes.select(col("node"), col("node").as("f")).localCheckpoint(false),
+          maxRounds)(fastSVRound(adj, _, jumps))
+      require(converged,
         s"connectedComponents: did not converge within $maxRounds rounds")
       (f.select(col("node"), col("f").as("component")), rounds)
     } finally adj.unpersist(false)
@@ -1118,10 +1003,9 @@ object Graph {
     * SQL-replayable. Returns (node, label) for every node of the edge
     * list (self-loop-only nodes keep their own id).
     *
-    * Stops at the labels' fixpoint — detected by the order-insensitive
-    * count + xxhash64 checksum of [[connectedComponents]] — or after
-    * `maxIters`. A fixpoint is invariant under further rounds, so
-    * early-stop is observationally identical to running the budget out
+    * Stops at the labels' fixpoint ([[fixpoint]]) or after `maxIters`.
+    * A fixpoint is invariant under further rounds, so early-stop is
+    * observationally identical to running the budget out
     * (which is what lets a fixed-depth SQL oracle replay an
     * early-stopped run). LPA is a heuristic: unlike a half-peeled
     * k-core, an iteration-capped labeling is still a valid LPA state,
@@ -1137,30 +1021,13 @@ object Graph {
                        maxIters: Int = 20): DataFrame = {
     require(maxIters >= 1, s"maxIters must be >= 1: $maxIters")
     val (adj, nodes) = lpaSetup(edges, srcCol, dstCol)
-    try {
-      // LAZY checkpoints (r21): the per-round convergence signature is
-      // the materializing action — one job per round instead of two
-      var state = nodes.select(col("z").as("node"), col("z").as("label"))
-        .localCheckpoint(false)
-      def sig(df: DataFrame): (Long, Long) = {
-        val r = df.agg(count(lit(1)),
-          coalesce(expr("bit_xor(xxhash64(node, label))"), lit(0L))).head()
-        (r.getLong(0), r.getLong(1))
-      }
-      var (cnt, chk) = sig(state)
-      var it = 0
-      var stable = false
-      while (!stable && it < maxIters) {
-        val next = lpaStep(adj, state).localCheckpoint(false)
-        val (c2, k2) = sig(next)
-        stable = c2 == cnt && k2 == chk
-        cnt = c2; chk = k2; state = next; it += 1
-      }
-      // every state assignment is followed by its sig() action, so the
-      // returned frame is already a materialized checkpoint scan —
-      // independent of the adjacency cache the finally drops
-      state
-    } finally adj.unpersist(false)
+    // fixpoint returns a materialized checkpoint scan, independent of
+    // the adjacency cache the finally drops; exhaustion returns the
+    // capped labeling
+    try fixpoint(
+        nodes.select(col("z").as("node"), col("z").as("label"))
+          .localCheckpoint(false), maxIters)(lpaStep(adj, _))._1
+    finally adj.unpersist(false)
   }
 
   /** One FUSED HITS auth half-step (r22 — the pageRank fusedStep fold):
@@ -1286,8 +1153,9 @@ object Graph {
     * last layer's predecessors) instead of re-joining the full member
     * set every step — identical BFS closure, predecessors of older
     * layers were already resolved when their layer was the frontier.
-    * Convergence for both is the count-free xxhash64 bit_xor signature
-    * (one O(1) scalar job per step).
+    * The forward flood runs through [[fixpoint]]; the backward flood
+    * stops on an exact empty-frontier count. Both draw on one shared
+    * budget of `maxIters` inner steps.
     */
   def stronglyConnectedComponents(edges: DataFrame, srcCol: String,
                                   dstCol: String, maxRounds: Int = 25,
@@ -1317,9 +1185,6 @@ object Graph {
     var remaining = nodes.count()
     var rounds = 0
     var itersLeft = maxIters
-    def sig(df: DataFrame): Long =
-      df.agg(coalesce(expr("bit_xor(xxhash64(node, color))"), lit(0L)))
-        .head().getLong(0)
     while (remaining > 0 && rounds < maxRounds) {
       // (1) forward max-color flood to fixpoint — FastSV shape: `jumps`
       // linear compositions against the checkpointed color (reach
@@ -1327,28 +1192,21 @@ object Graph {
       // measured sf0.1 knee — the bench graph's color diameter is ~5, so
       // extra jump joins cost more than the steps they save; deep-chain
       // graphs at scale are where jumps > 0 pays), then one max-hook
-      // over the closed in-adjacency; the signature is the one
-      // materializing job per inner step
-      var color = nodes.select(col("node"), col("node").as("color"))
-        .localCheckpoint(false)
-      var chk = sig(color)
-      var stable = false
-      while (!stable && itersLeft > 0) {
-        var g = color
+      // over the closed in-adjacency
+      val (color, steps, flooded) = fixpoint(
+          nodes.select(col("node"), col("node").as("color"))
+            .localCheckpoint(false), itersLeft) { cur =>
+        var g = cur
         for (_ <- 0 until jumps) {
           g = g.select(col("node"), col("color").as("__j"))
-            .join(color.select(col("node").as("__j"), col("color")), "__j")
+            .join(cur.select(col("node").as("__j"), col("color")), "__j")
             .select(col("node"), col("color"))
         }
-        val next = e
-          .join(g.select(col("node").as("u"), col("color").as("__c")), "u")
+        e.join(g.select(col("node").as("u"), col("color").as("__c")), "u")
           .groupBy(col("v").as("node")).agg(max("__c").as("color"))
-          .localCheckpoint(false)
-        val k2 = sig(next)
-        stable = k2 == chk
-        chk = k2; color = next; itersLeft -= 1
       }
-      require(stable,
+      itersLeft -= steps
+      require(flooded,
         s"stronglyConnectedComponents: color flood did not converge " +
           s"within $maxIters total inner steps (raise maxIters)")
       // (2) backward membership flood from each color root, restricted

@@ -328,8 +328,8 @@ class GraphSpec extends SparkSpec {
   }
 
   test("connected components: long path converges (round count is not diameter-bound)") {
-    // a 60-node path has diameter 59; the star rounds must still land a
-    // single component well inside the default 50-round cap (O(log^2 n))
+    // a 60-node path has diameter 59; the FastSV rounds must still land
+    // a single component well inside the default 50-round cap
     val path = (0L until 59L).map(i => (i, i + 1)).toDF("s", "d")
     val got = Graph.connectedComponents(path, "s", "d")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -345,71 +345,81 @@ class GraphSpec extends SparkSpec {
     assert(e.getMessage.contains("converge"), e.getMessage)
   }
 
+  /** Driver-side union-find reference: node -> smallest id in its
+    * component, over every endpoint of `raw`. */
+  private def unionFind(raw: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map(
+      raw.flatMap { case (a, b) => Seq(a -> a, b -> b) }: _*)
+    def find(x: Long): Long = { var r = x; while (parent(r) != r) r = parent(r); r }
+    raw.foreach { case (a, b) =>
+      if (a != b) { val (ra, rb) = (find(a), find(b)); if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb) }
+    }
+    parent.keys.map(i => i -> find(i)).toMap
+  }
+
   test("connected components: random graph matches driver union-find; partition-invariant") {
-    val raw = (0L until 120L).flatMap { i =>
+    val blocks = (0L until 120L).flatMap { i =>
       // sparse enough to leave several components: link within blocks
       // of 8, plus a few cross-block bridges
       val block = i / 8
       val base = Seq((i, block * 8 + (i * 5 + 1) % 8))
       if (i % 37 == 0 && i + 11 < 120) base :+ ((i, i + 11)) else base
     }
-    val edges = raw.toDF("s", "d")
-    // driver-side union-find reference
-    val parent = scala.collection.mutable.Map((0L until 120L).map(i => i -> i): _*)
-    def find(x: Long): Long = { var r = x; while (parent(r) != r) r = parent(r); r }
-    raw.foreach { case (a, b) =>
-      if (a != b) { val (ra, rb) = (find(a), find(b)); if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb) }
+    // two structurally disjoint id ranges (0..59 and 100..159), each
+    // internally wired by affine maps
+    val affine = (0L until 60L).flatMap(i => Seq(
+      (i, (i * 11 + 2) % 60),
+      (100 + i, 100 + (i * 7 + 3) % 60)))
+    for (raw <- Seq(blocks, affine)) {
+      val edges = raw.toDF("s", "d")
+      val want = unionFind(raw)
+      val got = Graph.connectedComponents(edges, "s", "d")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got === want)
+      assert(want.values.toSet.size > 1, "test graph should not be one component")
+      val again = Graph.connectedComponents(edges.repartition(17), "s", "d")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(again === got)
     }
-    val want = (0L until 120L).map(i => i -> find(i)).toMap
-    val got = Graph.connectedComponents(edges, "s", "d")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got === want)
-    assert(want.values.toSet.size > 1, "test graph should not be one component")
-    val again = Graph.connectedComponents(edges.repartition(17), "s", "d")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(again === got)
   }
 
-  test("connected components: FastSV agrees with the r21 star loop and cuts rounds") {
-    // the r22 FastSV loop and the retained r21 alternating-star baseline
-    // are two independent implementations of the same canonical min
-    // labeling — they must agree exactly, and FastSV's raison d'être is
-    // the round count: label reach multiplies by ~(jumps+2)=6 per round
-    // versus the star round's ~2, so a 60-node path (diameter 59) must
-    // converge (incl. the confirming round) well under the star loop's
-    // ~8 rounds
+  test("connected components: FastSV matches driver union-find and cuts rounds") {
+    // label reach multiplies by ~(jumps+2)=6 per round, so a 60-node
+    // path (diameter 59) must converge, confirming round included, in a
+    // handful of rounds
     val path = (0L until 59L).map(i => (i, i + 1)).toDF("s", "d")
     val (fsv, rounds) = Graph.ccFastSVCore(path, "s", "d",
       jumps = 4, maxRounds = 50)
     val got = fsv.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.size === 60 && got.values.forall(_ == 0L))
     assert(rounds <= 6, s"FastSV took $rounds rounds on a 59-path")
-    // agreement on a multi-component random graph
+    // a multi-component random graph matches the driver reference
     val raw = (0L until 90L).map(i => (i, (i * 13 + 4) % 45 + (i / 45) * 45))
-    val edges = raw.toDF("s", "d")
-    val a = Graph.connectedComponents(edges, "s", "d")
+    val a = Graph.connectedComponents(raw.toDF("s", "d"), "s", "d")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val b = Graph.ccAlternatingStar(edges, "s", "d")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(a === b)
+    assert(a === unionFind(raw))
   }
 
-  test("connected components: star-alternation agrees with Dedup's label flooding") {
-    // two INDEPENDENT implementations (Kiveris star rounds here, min-
-    // label flooding in Dedup, each tuned for a different graph regime)
-    // must assign identical component minima on the same pair list
-    // two structurally disjoint id ranges (0..59 and 100..159), each
-    // internally wired by affine maps — >= 2 components guaranteed
-    val raw = (0L until 60L).flatMap(i => Seq(
-      (i, (i * 11 + 2) % 60),
-      (100 + i, 100 + (i * 7 + 3) % 60)))
-    val edges = raw.toDF("id_a", "id_b")
-    val viaGraph = Graph.connectedComponents(edges, "id_a", "id_b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaDedup = Dedup.connectedComponents(edges, "id_a", "id_b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaGraph === viaDedup)
-    assert(viaGraph.values.toSet.size > 1, "graph should not be one component")
+  test("fixpoint: empty state, confirming round, oscillation, zero budget") {
+    // an empty state is a fixpoint: no round runs, the step is never called
+    val empty = Seq.empty[Long].toDF("x")
+    val (e0, r0, c0) = Graph.fixpoint(empty, 10)(_ => fail("step ran"))
+    assert(r0 === 0 && c0 && e0.count() === 0)
+    // x -> min(x + 1, 3) from 0 settles after 3 changing rounds; the
+    // 4th round confirms the repeat and is counted
+    val zero = Seq(0L).toDF("x")
+    val (s1, r1, c1) = Graph.fixpoint(zero, 10)(
+      _.select(least(col("x") + 1, lit(3L)).as("x")))
+    assert(r1 === 4 && c1)
+    assert(s1.as[Long].collect().toSeq === Seq(3L))
+    // x -> 1 - x never settles: exactly maxRounds rounds, not converged
+    val (s2, r2, c2) = Graph.fixpoint(zero, 5)(
+      _.select((lit(1L) - col("x")).as("x")))
+    assert(r2 === 5 && !c2)
+    assert(s2.as[Long].collect().toSeq === Seq(1L))
+    // a zero budget on a non-empty state returns it unconverged
+    val (s3, r3, c3) = Graph.fixpoint(zero, 0)(_ => fail("step ran"))
+    assert(r3 === 0 && !c3 && s3.as[Long].collect().toSeq === Seq(0L))
   }
 
   test("clustering coefficients: K4 is 1.0, path is 0, triangle+pendant is hand-exact") {
@@ -469,6 +479,15 @@ class GraphSpec extends SparkSpec {
       Set((0L, 1L), (1L, 2L)))
     intercept[IllegalArgumentException](
       Graph.kTruss(k4.toDF("s", "d"), "s", "d", 1))
+    // triangle strip 0..5: at k=4 round 1 peels the chords (i, i+2) and
+    // the end edges (support 1); that leaves the path 1-2-3-4, which has
+    // no triangles, so round 2 peels everything — and one round refuses
+    val strip = (0L until 5L).map(i => (i, i + 1)) ++
+      (0L until 4L).map(i => (i, i + 2))
+    assert(truss(strip, 4).isEmpty)
+    val e = intercept[IllegalArgumentException](
+      Graph.kTruss(strip.toDF("s", "d"), "s", "d", 4, maxRounds = 1).count())
+    assert(e.getMessage.contains("did not stabilize"), e.getMessage)
   }
 
   test("kTruss: matches a driver common-neighbor peel on a random graph") {
@@ -806,6 +825,13 @@ class GraphSpec extends SparkSpec {
       Graph.stronglyConnectedComponents(edges, "s", "d", maxRounds = 1)
         .count())
     assert(e.getMessage.contains("unassigned"), e.getMessage)
+    // color 12 needs several steps to reach node 1 (12 -> 0 -> 1), so a
+    // one-step budget cuts the first forward color flood
+    val e2 = intercept[IllegalArgumentException](
+      Graph.stronglyConnectedComponents(edges, "s", "d", maxIters = 1)
+        .count())
+    assert(e2.getMessage.contains("color flood did not converge"),
+      e2.getMessage)
   }
 
   test("graph card: hand-computed stats, empty graph zeros") {
