@@ -343,12 +343,13 @@ object Bench {
     // println above reaches the driver unwrapped; additionally persist the
     // identical line to bench_out.json so the record survives any log
     // mangling. Same fields, same values — measurement is unchanged.
+    val out = new java.io.File(sys.props("user.dir"), "bench_out.json")
     try {
-      val w = new java.io.PrintWriter(
-        new java.io.File("bench_out.json"), "UTF-8")
+      val w = new java.io.PrintWriter(out, "UTF-8")
       try w.println(jsonLine) finally w.close()
+      System.err.println(s"[bench] wrote ${out.getAbsolutePath}")
     } catch { case NonFatal(e) =>
-      System.err.println(s"[bench] bench_out.json write failed: ${e.getMessage}")
+      System.err.println(s"[bench] ${out.getAbsolutePath} write failed: ${e.getMessage}")
     }
     spark.stop()
     if (failed.nonEmpty || flaky.nonEmpty) sys.exit(1)

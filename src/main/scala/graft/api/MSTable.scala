@@ -2,6 +2,7 @@ package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnShim
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.expr.Taql
@@ -226,9 +227,12 @@ object MSTable {
   /** Full reference-parity read: a list of per-group datasets, rows sorted
     * by `index_cols` within each group, ROWID attached.
     *
-    * Only the distinct group tuples are collected to the driver (the
-    * reference does the same — its TAQL GROUPBY query returns one row per
-    * group, daskms/ordering.py:165-192). Row data never leaves executors.
+    * With `index_cols`, one ROWID window and one sort per read, pinned
+    * once (`ColumnShim.persistRows`); each dataset filters the pin (no
+    * exchange, no window), as the reference runs its grouping/ordering
+    * query once and reads datasets by row id (daskms/ordering.py:165-192).
+    * Only distinct group tuples reach the driver; rows never leave
+    * executors.
     */
   def read(spark: SparkSession, path: String, spec: ReadSpec): Seq[MSDataset] = {
     // ROWID is assigned on the FULL table (canonical order = index_cols when
@@ -254,35 +258,29 @@ object MSTable {
       base = base.select(keep.map(col): _*)
     }
     spec.numPartitions.foreach(n => base = base.repartition(n))
-
-    if (spec.groupCols.isEmpty) {
-      val sorted =
-        if (spec.indexCols.nonEmpty)
-          base.repartitionByRange(spec.indexCols.map(col): _*)
-            .sortWithinPartitions(spec.indexCols.map(col): _*)
-        else base
-      Seq(MSDataset(Nil, sorted))
-    } else if (spec.groupCols == Seq("__row__")) {
-      perRowDatasets(base)
-    } else {
-      val groups = base.select(spec.groupCols.map(col): _*).distinct()
-        .collect().toSeq
-        .map(r => spec.groupCols.zip(r.toSeq))
-        .sortBy(_.map(_._2.toString).mkString("\u0000"))
-      // fan-out guard: one filtered Spark job runs PER GROUP below -- the
-      // reference's semantics, sane only for low-cardinality keys
-      require(groups.size <= spec.maxGroups,
-        s"group_cols ${spec.groupCols.mkString(",")} has ${groups.size} distinct " +
-          s"tuples (> maxGroups=${spec.maxGroups}); one Spark job runs per group. " +
-          "Use MSTable.readDF (grouping stays a logical key) or raise ReadSpec.maxGroups.")
-      groups.map { key =>
-        val cond = key.map { case (c, v) => col(c) === lit(v) }.reduce(_ && _)
-        var g = base.filter(cond).drop(spec.groupCols: _*)
-        if (spec.indexCols.nonEmpty)
-          g = g.repartitionByRange(spec.indexCols.map(col): _*)
-            .sortWithinPartitions(spec.indexCols.map(col): _*)
-        MSDataset(key, g)
-      }
+    if (spec.groupCols == Seq("__row__")) return perRowDatasets(base)
+    // group columns first keep each group range-ordered by index_cols
+    // across partitions; without index_cols rows keep their ROWID order
+    val order = (spec.groupCols ++ spec.indexCols).map(col)
+    val sorted =
+      if (spec.indexCols.isEmpty) base
+      else base.repartitionByRange(order: _*).sortWithinPartitions(order: _*)
+    if (spec.groupCols.isEmpty) return Seq(MSDataset(Nil, sorted))
+    val groups = base.select(spec.groupCols.map(col): _*).distinct()
+      .collect().toSeq.map(r => spec.groupCols.zip(r.toSeq))
+      .sortBy(_.map(_._2.toString).mkString("\u0000"))
+    // fan-out guard (one dataset, and its jobs, per group): it fires before
+    // the pin, so a refused read pays for no sort
+    require(groups.size <= spec.maxGroups,
+      s"group_cols ${spec.groupCols.mkString(",")} has ${groups.size} distinct " +
+        s"tuples (> maxGroups=${spec.maxGroups}); one Spark job runs per group. " +
+        "Use MSTable.readDF (grouping stays a logical key) or raise ReadSpec.maxGroups.")
+    // pin only to share the sort: unsorted, a dataset's group filter
+    // reaches the parquet scan, cheaper than filtering a pin of all rows
+    val shared = if (spec.indexCols.isEmpty) base else ColumnShim.persistRows(sorted)
+    groups.map { key =>
+      val cond = key.map { case (c, v) => col(c) === lit(v) }.reduce(_ && _)
+      MSDataset(key, shared.filter(cond).drop(spec.groupCols: _*))
     }
   }
 
@@ -296,8 +294,10 @@ object MSTable {
     val n = withId.count()
     require(n <= maxRows,
       s"__row__ grouping materialises one dataset per row; $n rows exceeds $maxRows")
+    // one pin, so the datasets share one upstream scan (and zip map)
+    val shared = ColumnShim.persistRows(withId)
     (0L until n).map { r =>
-      MSDataset(Seq(RowId -> r), withId.filter(col(RowId) === r))
+      MSDataset(Seq(RowId -> r), shared.filter(col(RowId) === r))
     }
   }
 

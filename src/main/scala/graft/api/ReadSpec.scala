@@ -16,11 +16,11 @@ package graft.api
   *                   analog of the reference's row chunks
   *                   (ref: daskms/reads.py:33 default 10000-row chunks).
   *  - `maxGroups`  — fan-out guard for the dataset-list read path: each
-  *                   distinct group tuple becomes its own filtered Spark
-  *                   job, which is the reference's semantics but only sane
-  *                   for low-cardinality keys (FIELD_ID/DATA_DESC_ID).
-  *                   Beyond this, `MSTable.read` refuses and points at
-  *                   `MSTable.readDF`, where grouping stays a logical key.
+  *                   distinct group tuple becomes its own dataset (with
+  *                   `indexCols`, a filter of the read's one pinned sort),
+  *                   sane only for low-cardinality keys (FIELD_ID/
+  *                   DATA_DESC_ID). Beyond this, `MSTable.read` refuses
+  *                   before it sorts or pins and points at `MSTable.readDF`.
   */
 final case class ReadSpec(
     columns: Option[Seq[String]] = None,

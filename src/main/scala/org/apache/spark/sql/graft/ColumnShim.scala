@@ -1,10 +1,11 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Spark 4 bridge between `Column` and Catalyst `Expression`.
+/** Spark 4 bridges: `Column` ↔ Catalyst `Expression`, and [[persistRows]].
   *
   * Spark 4 moved `new Column(expr)` / `col.expr` behind
   * `org.apache.spark.sql.classic.ExpressionUtils`, which is `private[sql]`.
@@ -34,4 +35,16 @@ object ColumnShim {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "built-in")
+
+  /** `df` over its rows persisted MEMORY_AND_DISK: `localCheckpoint`
+    * without the lineage cut (a lost block is recomputed, not an error),
+    * and, unlike `Dataset.persist`, outside the CacheManager (freed once
+    * unreachable; a later read of the same path never matches it).
+    */
+  def persistRows(df: DataFrame): DataFrame = {
+    val ds = df.asInstanceOf[Dataset[_]]
+    val rows = ds.queryExecution.toRdd.map(_.copy())
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    Dataset.ofRows(ds.sparkSession, LogicalRDD.fromDataset(rows, ds, ds.isStreaming))
+  }
 }

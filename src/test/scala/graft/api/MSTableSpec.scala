@@ -6,20 +6,46 @@ import graft.SparkSpec
 class MSTableSpec extends SparkSpec {
 
   test("read with group/index/where yields one dataset per group, sorted, with ROWID") {
-    val dss = MSTable.read(spark, s"${sf()}/lineitem.parquet",
-      ReadSpec(groupCols = Seq("l_returnflag"),
-        indexCols = Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey",
-          "l_quantity", "l_extendedprice"),
-        where = Some("l_quantity > 10")))
+    val path = s"${sf()}/lineitem.parquet"
+    val index = Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey",
+      "l_quantity", "l_extendedprice")
+    val pinned = spark.sparkContext.getPersistentRDDs.keySet
+    val dss = MSTable.read(spark, path, ReadSpec(groupCols = Seq("l_returnflag"),
+      indexCols = index, where = Some("l_quantity > 10")))
     assert(dss.nonEmpty)
     val flags = dss.map(_.partitionKey.head._2.toString).sorted
     assert(flags === flags.distinct.sorted)
+    // ROWID is the rank of the index tuple in the full, unfiltered table
+    val rank = MSTable.withRowId(MSTable.open(spark, path), index)
+      .select((index :+ MSTable.RowId).map(col): _*)
+      .withColumnRenamed(MSTable.RowId, "rank")
     dss.foreach { ds =>
       assert(ds.df.columns.contains(MSTable.RowId))
       assert(!ds.df.columns.contains("l_returnflag")) // group col demoted
       val qs = ds.df.select(min("l_quantity")).head().getDouble(0)
       assert(qs > 10)
+      // the index is a unique key, so with ROWID = rank (checked below)
+      // strictly rising ROWIDs in collect order mean index order
+      val ids = ds.df.select(MSTable.RowId).collect().map(_.getLong(0)).toSeq
+      assert(ids.nonEmpty && ids === ids.sorted && ids.distinct === ids)
+      // every action reads the read's shared pin: no exchange, no window
+      val plan = ds.df.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange") && !plan.contains("Window"), plan)
     }
+    val union = dss.map(_.withPartitionColumns).reduce(_ unionByName _)
+    val joined = union.join(rank, index)
+    assert(joined.count() === union.count())
+    assert(joined.filter(col(MSTable.RowId) =!= col("rank")).count() === 0)
+    val filtered = MSTable.open(spark, path).filter(col("l_quantity") > 10)
+    val got = union.drop(MSTable.RowId).select(filtered.columns.map(col): _*)
+    assert(got.exceptAll(filtered).isEmpty && filtered.exceptAll(got).isEmpty)
+    // the pin keeps its lineage: with its blocks gone (as a lost executor
+    // drops them) the datasets recompute the same rows rather than fail
+    def rowIds = dss.map(_.df.select(MSTable.RowId).collect().toSeq)
+    val before = rowIds
+    spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !pinned(id) }
+      .values.foreach(_.unpersist(blocking = true))
+    assert(rowIds === before)
   }
 
   test("withPartitionColumns restores the group column") {

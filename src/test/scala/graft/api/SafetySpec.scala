@@ -272,10 +272,14 @@ class SafetySpec extends SparkSpec {
 
   test("grouped read refuses a fan-out beyond maxGroups, readDF does not") {
     val path = s"${sf()}/lineitem.parquet"
+    val pinned = spark.sparkContext.getPersistentRDDs.keySet
     val ex = intercept[IllegalArgumentException] {
-      MSTable.read(spark, path, ReadSpec(groupCols = Seq("l_orderkey"), maxGroups = 10))
+      MSTable.read(spark, path, ReadSpec(groupCols = Seq("l_orderkey"),
+        indexCols = Seq("l_orderkey", "l_linenumber"), maxGroups = 10))
     }
     assert(ex.getMessage.contains("readDF"))
+    // the guard fires before the read pins its sorted frame
+    assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(pinned))
     // the bulk path handles the same grouping as a logical key
     val bulk = MSTable.readDF(spark, path, ReadSpec(groupCols = Seq("l_orderkey")))
     assert(bulk.select("l_orderkey").distinct().count() > 10)
