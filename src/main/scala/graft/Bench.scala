@@ -8,6 +8,11 @@ import scala.util.control.NonFatal
   * scale-relevant operators (scan-agg, joins, top-k, windows, dedup, ANN,
   * text analysis) — excludes the small write-roundtrip parity queries whose
   * cost is file churn, not query execution.
+  *
+  * Usage: runMain graft.Bench [q_a,q_b,...]. The optional argument is
+  * [[Verify.selectQueries]]'s filter: it times only the named queries
+  * (any name in `SparkEntry.queries`) with the same protocol, and `value`
+  * and `roster21` sum over what ran.
   */
 object Bench {
   private val headline = Seq(
@@ -48,6 +53,8 @@ object Bench {
     "q_betweenness", "q_communities", "q_components",
     "q_auc", "q_bootstrap")
 
+  private[graft] val roster: Seq[String] = headline ++ extended
+
   /** The bench times OPERATORS. Where the CORRECTNESS entry is a derived
     * quality check that also runs an exact baseline (q_dedup_minhash runs
     * ngramJaccardPairs + four audit aggregations), substitute the raw
@@ -68,7 +75,7 @@ object Bench {
     }.reduce(_ unionByName _)
   }
 
-  private[graft] val operatorOverrides: Map[String, (SparkSession, String) => DataFrame] =
+  private val operatorOverrides: Map[String, (SparkSession, String) => DataFrame] =
     Map(
       "q_dedup_minhash" -> ((s, dir) =>
         graft.ops.Dedup.minHashDedup(
@@ -132,7 +139,7 @@ object Bench {
     * (~5% of a ~20% shift). On an uncontended machine this tracks the
     * single-thread time; under contention it inflates with the queries.
     */
-  private[graft] def calibrateParallel(threads: Int): Double = {
+  private def calibrateParallel(threads: Int): Double = {
     def once(): Double = {
       val t0 = System.nanoTime()
       val ts = (0 until threads).map(_ => new Thread(() => lcgLoop()))
@@ -207,6 +214,8 @@ object Bench {
     String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
 
   def main(args: Array[String]): Unit = {
+    require(args.length <= 1, "usage: graft.Bench [q_a,q_b,...]")
+    val names = Verify.selectQueries(args.headOption.getOrElse(roster.mkString(",")))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // idle gate: the r12 record improved yet flagged itself contaminated
@@ -271,7 +280,7 @@ object Bench {
     val warmupPasses =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP", "1").toInt
     (0 until warmupPasses).foreach { _ =>
-      (headline ++ extended).filter(qs.contains).foreach { name =>
+      names.foreach { name =>
         try qs(name)(spark, sfDir).count()
         catch { case NonFatal(_) => () } // the timed loop reports it
       }
@@ -281,7 +290,7 @@ object Bench {
     // the JSON (never folded into the total), and exit nonzero so the
     // driver records rc != 0 — round 11 recorded four dead queries as
     // ~0.06 s failure-overhead timings and deflated the headline total.
-    val results = (headline ++ extended).filter(qs.contains).map { name =>
+    val results = names.map { name =>
       var nFail = 0
       val times = (0 until iters).flatMap { _ =>
         val t0 = System.nanoTime()

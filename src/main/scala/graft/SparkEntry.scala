@@ -82,9 +82,13 @@ object SparkEntry {
   private def tmp(name: String) = s"/root/repo/target/qtmp/$name"
 
   /** Recall floors for the approximate (ANN / LSH / MinHash) derived
-    * checks — set from measured recalls at sf0.001/0.01/0.1
-    * (tool: `graft.RecallProbe`) with a wide safety margin. The check is
-    * "the approximation holds its quality contract", not a magic number.
+    * checks — set from measured recalls at sf0.001/0.01/0.1 with a wide
+    * safety margin. The derived-check queries themselves compute those
+    * recalls against the exact baselines (`q_ann_*` via `annRecallCheck`
+    * or `n_hit` / `n_tot`; `q_dedup_minhash`, `q_dedup_embed_lsh` and `q_dedup_semantic` via
+    * `n_miss` / `n_exact`), and `graft.Verify` writes whether each recall
+    * holds its floor. The check is "the approximation holds its quality
+    * contract", not a magic number.
     */
   private val IvfRecallFloor = 0.4 // per-query; measured min 0.60 (all SFs)
   private val PqRecallFloor = 0.4 // per-query; measured min 0.80 (all SFs)

@@ -5,12 +5,26 @@ import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** The query names a comma-separated filter selects, in filter order.
+    * Refuses an empty filter and any name that is not in
+    * `SparkEntry.queries`, naming it, so a typo or a renamed query can
+    * never read as a clean run of zero queries. Also the query filter of
+    * [[Bench]].
+    */
+  def selectQueries(filter: String): Seq[String] = {
+    val names = filter.split(",").map(_.trim).filter(_.nonEmpty).toSeq.distinct
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
+    require(names.nonEmpty, s"empty query filter: '$filter'")
+    names
+  }
+
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query-name filter for fast local
     // iteration on a few queries (the driver always runs the full roster)
     val (sfDir, outDir, only) = args match {
       case Array(s, o)    => (s, o, None)
-      case Array(s, o, f) => (s, o, Some(f.split(",").toSet))
+      case Array(s, o, f) => (s, o, Some(selectQueries(f).toSet))
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()

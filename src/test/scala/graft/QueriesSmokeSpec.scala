@@ -15,6 +15,16 @@ class QueriesSmokeSpec extends SparkSpec {
     assert(missing.isEmpty, s"oracleSql without queries impl: $missing")
   }
 
+  test("query filter: bench roster resolves, a subset selects, an unknown name is refused") {
+    assert(Bench.roster.size == 29)
+    assert(Verify.selectQueries(Bench.roster.mkString(",")) == Bench.roster)
+    assert(Verify.selectQueries("q_components,q_pagerank") ==
+      Seq("q_components", "q_pagerank"))
+    val e = intercept[IllegalArgumentException](
+      Verify.selectQueries("q_components,q_nope"))
+    assert(e.getMessage.contains("q_nope") && !e.getMessage.contains("q_components"))
+  }
+
   SparkEntry.queries.foreach { case (name, fn) =>
     test(s"$name executes on sf0.001") {
       val df = fn(spark, "/root/testdata/sf0.001")
