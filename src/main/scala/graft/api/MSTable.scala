@@ -1,9 +1,11 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{JoinedRow, SpecificInternalRow}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnShim
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
 
 import graft.expr.Taql
 
@@ -75,25 +77,117 @@ object MSTable {
 
   // ------------------------------------------------------------------ rowid
 
-  /** Assign a stable ROWID in the current physical order of `df` — one
-    * extra count job (partition sizes) + a map, no global shuffle.
-    * RDD-based (re-encodes every row), so it is kept only as the fallback
-    * for small arbitrary frames (e.g. [[perRowDatasets]]); scans use
-    * [[scanWithRowId]] and ordered frames use [[withRowId]], both of which
-    * stay inside whole-stage codegen.
+  /** Assign a stable ROWID in the current physical order of `df`: its
+    * [[runningTotals]] row count minus 1 — one census job, then a narrow
+    * pass, no shuffle. It serves frames already in their final order (a
+    * caller's `orderBy`, a zarr scan's store order); parquet scans use
+    * [[scanWithRowId]] and unordered frames with a key [[withRowId]].
     *
-    * `pin = true` localCheckpoints the input RDD before `zipWithIndex`'s
-    * census job, so the census and the later emit pass cannot see two
-    * different evaluations of a nondeterministic upstream (and the input
-    * computes once, not twice). The cost is a full materialization —
-    * callers with a plain deterministic scan keep the default.
+    * `pin` is [[runningTotals]]'s: callers with a plain deterministic
+    * upstream keep the default.
     */
-  def zipWithRowId(df: DataFrame, pin: Boolean = false): DataFrame = {
-    val spark = df.sparkSession
-    val schema = StructType(df.schema.fields :+ StructField(RowId, LongType, nullable = false))
-    val base = if (pin) df.rdd.localCheckpoint() else df.rdd
-    val rdd = base.zipWithIndex().map { case (r, idx) => Row.fromSeq(r.toSeq :+ idx) }
-    spark.createDataFrame(rdd, schema)
+  def zipWithRowId(df: DataFrame, pin: Boolean = false): DataFrame =
+    runningTotals(df, Seq(None -> RowId), pin = pin)
+      .withColumn(RowId, col(RowId) - 1L)
+
+  /** Inclusive running totals over `df` in its current order: for each
+    * `(weight, out)`, column `out` = Σ weight over this row and the earlier
+    * rows of its run — the whole frame, or with `runKey` each maximal
+    * stretch of consecutive rows with one (`==`) key value. A `None`
+    * weight counts 1 per row (a row number is that total minus 1); a
+    * column weight is LONG or DOUBLE, sums in its own type, and a null
+    * counts 0. An exclusive prefix is the total minus the row's weight.
+    *
+    * One census job sums each weight per (partition, run), the driver
+    * scans those few scalars into start offsets, and one narrow pass
+    * appends the totals to each Catalyst row: no shuffle, no `Window`, no
+    * `Row` conversion. The census and the pass read ONE RDD object (the
+    * `queryExecution.toRdd` of `df`, taken once), so they see the same
+    * partitions. Re-planning `df` for the census would be wrong: each
+    * execution of an `orderBy` draws new range boundaries. `pin = true`
+    * copies the rows into a local checkpoint that the census fills and
+    * the pass reads, so a nondeterministic upstream (and the sort) runs
+    * once; losing an executor between the two jobs then fails the query.
+    *
+    * `skipAbove = Some(b)`: the caller keeps only rows whose first total
+    * (a count or nonnegative LONG) is ≤ b, so a partition whose every run
+    * starts above b is skipped unread. `negativeError` fails the census
+    * on a negative LONG weight.
+    */
+  private[graft] def runningTotals(df: DataFrame,
+      weights: Seq[(Option[String], String)], runKey: Option[String] = None,
+      pin: Boolean = false, skipAbove: Option[Long] = None,
+      negativeError: Option[String] = None): DataFrame = {
+    val schema = df.schema
+    val src = weights.map(_._1.fold(-1)(schema.fieldIndex)).toArray
+    val dbl = src.map(i => i >= 0 && schema(i).dataType == DoubleType)
+    require(src.nonEmpty && src.forall(i => i < 0 ||
+      Seq(LongType, DoubleType).contains(schema(i).dataType)),
+      s"runningTotals: LONG or DOUBLE weights: $weights")
+    require(skipAbove.isEmpty || !dbl(0), "runningTotals: skipAbove needs a LONG total")
+    val key = runKey.map { k =>
+      val (i, get) = (schema.fieldIndex(k), InternalRow.getAccessor(schema(k).dataType))
+      (r: InternalRow) => get(r, i)
+    }
+    type Totals = (Array[Long], Array[Double])
+    def zero: Totals = (new Array[Long](src.length), new Array[Double](src.length))
+    def add(t: Totals, r: InternalRow): Unit = for (j <- src.indices) {
+      val i = src(j)
+      if (i < 0) t._1(j) += 1L
+      else if (r.isNullAt(i)) ()
+      else if (dbl(j)) t._2(j) += r.getDouble(i)
+      else {
+        val w = r.getLong(i)
+        require(w >= 0 || negativeError.isEmpty, s"${negativeError.get} $w")
+        t._1(j) += w
+      }
+    }
+    def plus(a: Totals, b: Totals): Totals = (a._1.zip(b._1).map(p => p._1 + p._2),
+      a._2.zip(b._2).map(p => p._1 + p._2))
+    def keyOf(r: InternalRow): Any = if (key.isEmpty) null else key.get(r)
+    val outSchema = StructType(schema.fields ++ weights.zip(dbl).map {
+      case ((_, out), d) => StructField(out, if (d) DoubleType else LongType, nullable = false)
+    })
+    ColumnShim.mapRows(df, outSchema) { input =>
+      val rows = if (pin) input.map(_.copy()).localCheckpoint() else input
+      // census: (run key, run total) per run of each partition, in order
+      val census = rows.mapPartitions { it =>
+        val runs = scala.collection.mutable.ArrayBuffer.empty[(Any, Totals)]
+        it.foreach { r =>
+          val k = keyOf(r)
+          if (runs.isEmpty || runs.last._1 != k) runs += (InternalRow.copyValue(k) -> zero)
+          add(runs.last._2, r)
+        }
+        Iterator(runs.toArray)
+      }.collect()
+      // a partition's first run continues the previous partition's last
+      // run when the keys match; every other run starts at zero
+      var last: (Any, Totals) = null
+      val starts = census.map(_.map { case (k, sum) =>
+        val start = if (last != null && last._1 == k) last._2 else zero
+        last = (k, plus(start, sum))
+        (k, start)
+      })
+      val first = if (src(0) < 0) 1L else 0L
+      rows.mapPartitionsWithIndex { (p, it) =>
+        val runs = starts(p)
+        if (skipAbove.exists(b => runs.nonEmpty && runs.forall(_._2._1(0) + first > b)))
+          Iterator.empty
+        else {
+          val out = new SpecificInternalRow(dbl.toSeq.map(if (_) DoubleType else LongType))
+          val joined = new JoinedRow
+          var run = -1
+          var t: Totals = null
+          it.map { r =>
+            if (run < 0 || runs(run)._1 != keyOf(r)) { run += 1; t = plus(runs(run)._2, zero) }
+            add(t, r)
+            for (j <- src.indices)
+              if (dbl(j)) out.setDouble(j, t._2(j)) else out.setLong(j, t._1(j))
+            joined(r, out)
+          }
+        }
+      }
+    }
   }
 
   /** Physical-order ROWID for a parquet store WITHOUT leaving columnar

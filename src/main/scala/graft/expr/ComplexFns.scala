@@ -50,11 +50,4 @@ object ComplexFns {
   /** |a+bi| = sqrt(a²+b²) — returns a real (double) column. */
   def c_abs(a: Column): Column =
     sqrt(c_re(a) * c_re(a) + c_im(a) * c_im(a))
-
-  /** Complex phase angle atan2(im, re) — real column. */
-  def c_arg(a: Column): Column = atan2(c_im(a), c_re(a))
-
-  /** Scale by a real column/literal. */
-  def c_scale(a: Column, k: Column): Column =
-    c_make(c_re(a) * k, c_im(a) * k)
 }

@@ -650,42 +650,36 @@ object Classifier {
   }
 
   /** Exact strictly-below prefix sums over a DISTINCT-key frame WITHOUT
-    * an unpartitioned window (r22 — retires the
-    * "WindowExec: No Partition Defined" single-task sites in
-    * [[rocAuc]] / [[deLongMomentsPinned]] / [[spearmanCorrelation]]).
-    * Returns `per` plus, for every `(sumCol, outCol)` pair, a DOUBLE
-    * column `outCol` = Σ sumCol over rows with STRICTLY smaller key.
+    * an unpartitioned window (the "WindowExec: No Partition Defined"
+    * single-task sites in [[rocAuc]] / [[deLongMomentsPinned]] /
+    * [[spearmanCorrelation]]). Returns `per` plus, for every
+    * `(sumCol, outCol)` pair, a DOUBLE column `outCol` = Σ sumCol over
+    * rows with STRICTLY smaller key.
     *
-    * Plan choice is size-based and deterministic (see the cutoff note
-    * in the body); the large-frame path is two passes, all bounded:
-    * (1) rows bucket by a monotone range map
-    * of the key — the finite min/max ride a one-row aggregate attached
-    * by a broadcast cross join (no driver collect), ±Inf pin to the end
-    * buckets, and weak monotonicity is all the split needs; (2) the
-    * within-bucket prefix runs in a PARTITIONED window (keys are
-    * distinct, so the order is total), and the bucket offsets come from
-    * a ≤ buckets² broadcast theta join. Every summed column at the call
-    * sites holds integer-valued counts, so the regrouped additions are
-    * BIT-identical to the sequential unpartitioned prefix. Callers must
-    * have refused NaN keys already (all three sites' hygiene censuses
-    * run before this frame is built) and should pass a checkpointed
-    * `per` — it is read three times (min/max, bucket totals, rows).
+    * Plan choice is size-based and deterministic (see the cutoff note in
+    * the body). The large-frame path is one range-partitioned sort on the
+    * key and [[graft.api.MSTable.runningTotals]] (one census job, one
+    * narrow pass); the strictly-below sum is the running total minus the
+    * row's own value. Every summed column at the call sites holds
+    * integer-valued counts, so the regrouped additions are BIT-identical
+    * to the sequential unpartitioned prefix. Callers must have refused
+    * NaN keys already (all three sites' hygiene censuses run before this
+    * frame is built) and should pass a checkpointed `per`.
     */
   private[graft] def boundedPrefix(per: DataFrame, keyCol: String,
       sums: Seq[(String, String)], distinctCount: Long,
-      buckets: Int = 1024, smallCutoff: Long = 4096): DataFrame = {
-    require(buckets >= 1, s"boundedPrefix: buckets >= 1: $buckets")
+      smallCutoff: Long = 4096): DataFrame = {
     require(distinctCount >= 0,
       s"boundedPrefix: distinctCount >= 0: $distinctCount")
     // `distinctCount` comes from the caller's EXISTING hygiene job (every
     // site already aggregates the distinct-key frame once), so the plan
     // choice is size-based and deterministic, like AQE: a frame KNOWN to
     // be ≤ smallCutoff rows takes one bounded single-task window with an
-    // explicit constant partition spec — identical execution to the r21
+    // explicit constant partition spec — identical execution to an
     // unpartitioned window at a size where one task is the right plan,
     // without tripping the scale-blind "No Partition Defined" warning —
-    // and anything larger takes the bucketed two-pass below. Both paths
-    // are bit-identical (integer counts).
+    // and anything larger takes the sorted running total below. Both
+    // paths are bit-identical (integer counts).
     if (distinctCount <= smallCutoff) {
       // the partition key is a NON-FOLDABLE constant (pmod(xxhash64(k), 1)
       // = 0 for every row, integer arithmetic — Inf/NaN-safe): a literal
@@ -700,47 +694,10 @@ object Classifier {
       }
       return per.select(per.columns.map(col) ++ cums: _*)
     }
-    val k = col(keyCol).cast("double")
-    val finite = !isnan(k) && k =!= Double.PositiveInfinity &&
-      k =!= Double.NegativeInfinity
-    val mm = per.agg(min(when(finite, k)).as("__kmin"),
-      max(when(finite, k)).as("__kmax"))
-    // floor((k-min)/span*B) is weakly monotone in k (IEEE subtraction,
-    // division and multiplication by nonnegative values preserve order);
-    // the span > 0 guard keeps ANSI mode from flagging the degenerate
-    // one-distinct-key / all-infinite frames, which land in bucket 0 —
-    // still monotone
-    val bRaw = floor((k - col("__kmin")) /
-      (col("__kmax") - col("__kmin")) * buckets)
-    val b = when(k === Double.NegativeInfinity, lit(0))
-      .when(k === Double.PositiveInfinity, lit(buckets - 1))
-      .when(col("__kmax") > col("__kmin"), coalesce(
-        least(greatest(bRaw, lit(0)), lit(buckets - 1)), lit(0)))
-      .otherwise(lit(0))
-      .cast("int")
-    val withB = per.crossJoin(broadcast(mm)).withColumn("__b", b)
-      .drop("__kmin", "__kmax")
-    val tot = withB.groupBy("__b")
-      .agg(sums.map { case (c, _) => sum(col(c)).as(s"__t_$c") }.head,
-        sums.tail.map { case (c, _) => sum(col(c)).as(s"__t_$c") }: _*)
-    val off = tot.as("x")
-      .join(broadcast(tot.as("y")), col("y.__b") < col("x.__b"), "left")
-      .groupBy(col("x.__b").as("__b"))
-      .agg(sums.map { case (c, out) =>
-          coalesce(sum(col(s"y.__t_$c").cast("double")), lit(0.0))
-            .as(s"__o_$out") }.head,
-        sums.tail.map { case (c, out) =>
-          coalesce(sum(col(s"y.__t_$c").cast("double")), lit(0.0))
-            .as(s"__o_$out") }: _*)
-    val wloc = org.apache.spark.sql.expressions.Window.partitionBy("__b")
-      .orderBy(keyCol)
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val cums = sums.map { case (c, out) =>
-      (col(s"__o_$out") +
-        coalesce(sum(col(c).cast("double")).over(wloc), lit(0.0))).as(out)
-    }
-    withB.join(broadcast(off), "__b")
-      .select(per.columns.map(col) ++ cums: _*)
+    graft.api.MSTable.runningTotals(per.orderBy(keyCol),
+        sums.map { case (c, out) => Some(c) -> out })
+      .select(per.columns.map(col) ++ sums.map { case (c, out) =>
+        (col(out) - coalesce(col(c), lit(0))).cast("double").as(out) }: _*)
   }
 
   /** ROC AUC via the Mann–Whitney U identity (Hanley & McNeil 1982):
@@ -755,10 +712,9 @@ object Classifier {
     * it and the refusal reads the checkpointed distinct-score table,
     * so there is no separate filter scan — then the cumulative-
     * negative prefix sum runs over the DISTINCT-SCORE frame via
-    * [[boundedPrefix]] (r22): a partitioned per-bucket window plus a
-    * bounded bucket-offset join, never a single-task unpartitioned
-    * window, and bit-identical to the sequential prefix because the
-    * counts are integers. For corpus-scale continuous scores pass
+    * [[boundedPrefix]]: a sorted running total, never a single-task
+    * unpartitioned window, and bit-identical to the sequential prefix
+    * because the counts are integers. For corpus-scale continuous scores pass
     * `bins = Some(b)`: scores quantize to b fixed-width bins first
     * (scores must then lie in [0, 1]) and the same tie-exact formula
     * runs over ≤ b rows — the [[TextAnalysis.madOutliers]]
@@ -793,10 +749,10 @@ object Classifier {
       "rocAuc: scores must be non-null, non-NaN" +
         (if (bins.isDefined) " in [0, 1] (binned mode)" else "") +
         " and labels in {0, 1} — clean the frame first")
-    // r22: the cumulative-negative prefix is [[boundedPrefix]] — a
-    // bounded single task below the cutoff, the bucketed two-pass above
-    // it — never a scale-blind unpartitioned window; bit-identical
-    // either way (integer counts). The distinct count rides the census.
+    // the cumulative-negative prefix is [[boundedPrefix]] — a bounded
+    // single task below the cutoff, a sorted running total above it —
+    // never a scale-blind unpartitioned window; bit-identical either way
+    // (integer counts). The distinct count rides the census.
     val contrib = boundedPrefix(perScore, "__s", Seq("nn" -> "cum_nn"),
         distinctCount = badRow.getLong(1))
       .select(col("np"), col("nn"), col("cum_nn"))
@@ -1502,13 +1458,6 @@ object Classifier {
       when(u < t, k).otherwise(acc)
     }.cast("double")
   }
-
-  /** The composed md5 → Poisson(1) replicate weight ([[uniformDraw]]
-    * then [[poissonFromU]]) — the reference form the oracle SQL
-    * replays; [[bootstrapAggregate]] computes the same chain factored
-    * across its two projections. */
-  private[graft] def poissonWeight(idCol: String, b: Int): Column =
-    poissonFromU(uniformDraw(idCol, b))
 
   def bootstrapMeanCI(df: DataFrame, valueCol: String, idCol: String,
                       replicates: Int = 200,

@@ -105,13 +105,6 @@ object Dedup {
 
   // ---------------------------------------------------------------- minhash
 
-  /** k MinHash signature values over a PRE-HASHED (long) shingle array:
-    * one tight pass per row via the custom [[graft.expr.VectorExprs.MinHashSig]]
-    * Catalyst expression (k running minima of XXH64(shingle, seed=i)).
-    */
-  def minHashSignature(hashedShingles: Column, k: Int): Column =
-    graft.expr.VectorExprs.minhash_sig(hashedShingles, k)
-
   /** Choose the LSH `(bands, rowsPerBand)` split of a `sigLen`-hash
     * MinHash signature for a target Jaccard `threshold`, so callers give
     * the semantic knob ("pairs at >= 0.6 similar") and not the S-curve
@@ -151,22 +144,6 @@ object Dedup {
     (1 to sigLen).filter(sigLen % _ == 0).map(b => (b, sigLen / b))
       .minBy { case (b, r) => cost(b, r) }
   }
-
-  /** MinHash + LSH candidate pairs.
-    *
-    * @param bands   number of LSH bands; rows-per-band = k / bands.
-    *                P(candidate | jaccard s) = 1-(1-s^r)^b.
-    * @param maxBucket safety cap: buckets larger than this (degenerate
-    *                content, e.g. empty docs) are dropped rather than
-    *                exploding into n² pairs — standard skew guard.
-    * @return (id_a, id_b) candidate pairs, id_a < id_b, distinct.
-    */
-  def minHashCandidates(docs: DataFrame, textCol: String, idCol: String,
-                        shingleWords: Int = 3, k: Int = 32, bands: Int = 8,
-                        maxBucket: Int = 1000): DataFrame =
-    minHashCandidatesFromShingles(
-      shingleFrame(docs, textCol, idCol, Nil, shingleWords), idCol,
-      k, bands, maxBucket)
 
   /** Candidate pairs from a pre-built shingle frame (`idCol`, `sh`).
     *

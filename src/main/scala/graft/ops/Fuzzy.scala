@@ -322,11 +322,11 @@ object Fuzzy {
     * domain-knowledge matches (same prefix, same phonetic key) together
     * regardless of edit distance budget.
     *
-    * Scale shape: ONE range-partitioned global sort, positions from the
-    * per-partition-count census ([[graft.api.MSTable.zipWithRowId]] — a
-    * whole-frame window would serialize into one task), then the window
-    * pairing is an equi-join on `pos + offset` (longs), verify on the
-    * candidates only. `assumeDeterministic` has
+    * Scale shape: ONE range-partitioned global sort, positions from
+    * [[graft.api.MSTable.zipWithRowId]] (a per-partition row-count census
+    * and one narrow pass — a whole-frame window would serialize into one
+    * task), then the window pairing is an equi-join on `pos + offset`
+    * (longs), verify on the candidates only. `assumeDeterministic` has
     * [[Sampling.deterministicShuffle]]'s exact semantics/trade-off (the
     * two-job census needs a pinned or deterministic input).
     */

@@ -33,9 +33,6 @@ object Pca {
                       components: Array[Array[Double]], totalVariance: Double) {
     def dim: Int = mean.length
     def k: Int = components.length
-    /** Fraction of total variance captured by each kept component. */
-    def explainedVariance: Array[Double] =
-      eigenvalues.map(_ / math.max(totalVariance, Double.MinPositiveValue))
   }
 
   /** Eigen-decomposition of a symmetric matrix by cyclic Jacobi rotations

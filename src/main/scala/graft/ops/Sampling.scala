@@ -102,10 +102,9 @@ object Sampling {
     * length ties, so assignment is a pure function of the data.
     *
     * Scale shape: ONE range-partitioned global sort (sampled
-    * boundaries, no single-task window), positions from the
-    * [[graft.api.MSTable.zipWithRowId]] census — same machinery and
-    * same `assumeDeterministic` pin trade-off as
-    * [[deterministicShuffle]].
+    * boundaries, no single-task window), positions from
+    * [[graft.api.MSTable.zipWithRowId]] — same machinery and same
+    * `assumeDeterministic` pin trade-off as [[deterministicShuffle]].
     */
   def lengthSortedBatches(df: DataFrame, orderCol: String,
                           tokenCount: Column, batchSize: Int,
@@ -754,28 +753,19 @@ object Sampling {
     *
     * Scale shape: ONE range-partitioned sort exchange on the 16-byte hash
     * (Spark's global sort — sampled range boundaries, no single-task
-    * bottleneck), then contiguous positions come from per-partition counts
-    * stitched with partition-local offsets (`zipWithRowId`'s census) — a
-    * window over the whole frame would instead serialize into one task.
-    * Ties (duplicate keys) break on the key itself, keeping the order
-    * total and reproducible.
+    * bottleneck), then contiguous positions from
+    * [[graft.api.MSTable.zipWithRowId]]'s per-partition census and
+    * offsets — a window over the whole frame would instead serialize into
+    * one task. Ties (duplicate keys) break on the key itself, keeping the
+    * order total and reproducible.
     *
-    * The sorted frame is evaluated by TWO jobs (the census inside
-    * `zipWithIndex`, then the emit); it is pinned with `localCheckpoint`
-    * before the census so a nondeterministic upstream (sample, prior
-    * shuffle order, AQE re-plan) cannot desync the two passes — and so
-    * the sort runs once, not twice, at scale. `assumeDeterministic = true`
-    * skips the pin (trades a full materialization for a second sort) when
-    * the input is a plain deterministic scan.
-    *
-    * Failure mode of the pin: `localCheckpoint` materializes to
-    * EXECUTOR-LOCAL storage and truncates lineage — losing an executor
-    * between the census and the emit fails the job with no recompute
-    * path. That window is two back-to-back jobs here; on preemptible
-    * nodes or long-running clusters, prefer `assumeDeterministic = true`
-    * over a deterministic scan (second sort instead of a pin), or persist
-    * the input to reliable storage first. Applies equally to
-    * [[selectTokenBudget]] and [[capPerStratum]].
+    * The census and the emit are two jobs over the sorted rows, which are
+    * pinned between them (see [[graft.api.MSTable.runningTotals]] for what
+    * the pin guards and its executor-loss failure mode).
+    * `assumeDeterministic = true` skips the pin when the input is a plain
+    * deterministic scan, trading the materialization for a second read of
+    * the sort. Applies equally to [[selectTokenBudget]] and
+    * [[capPerStratum]].
     */
   def deterministicShuffle(df: DataFrame, keyCol: String,
                            seed: Long = 42L,
@@ -804,65 +794,26 @@ object Sampling {
     * BY stratum ORDER BY hash)` ≤ cap — which serializes each stratum
     * into ONE window task (a 40%-of-corpus CommonCrawl stratum = one
     * task). Instead: one range-partitioned sort on (stratum, hash, key) —
-    * big strata span many contiguous partitions — then a per-partition
-    * census of per-stratum counts (O(strata × partitions) driver data,
-    * same class as selectTokenBudget's census) seeds each partition's
-    * running rank, and partitions whose stratum offsets already exceed
-    * the cap emit nothing. The sorted frame is pinned (localCheckpoint)
-    * across census + emit like the other census ops; `assumeDeterministic`
-    * opts out.
+    * big strata span many contiguous partitions — then
+    * [[graft.api.MSTable.runningTotals]] with the stratum as run key: a
+    * per-partition census of per-stratum counts (O(strata × partitions)
+    * driver data) seeds each partition's running rank, and partitions
+    * whose strata are all past the cap emit nothing. The sorted frame is
+    * pinned across census + emit like the other census ops;
+    * `assumeDeterministic` opts out.
     */
   def capPerStratum(df: DataFrame, keyCol: String, stratumCol: String,
                     cap: Long,
                     assumeDeterministic: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
     require(cap > 0, s"cap must be positive: $cap")
     requireFreeColumns(df, Seq("__rk", "stratum_rank"), "capPerStratum")
-    val spark = df.sparkSession
-    val base = df.withColumn("__rk", hashBucket(col(keyCol)))
+    val sorted = df.withColumn("__rk", hashBucket(col(keyCol)))
       .orderBy(col(stratumCol), col("__rk"), col(keyCol))
-    val sIdx = base.schema.fieldIndex(stratumCol)
-    val rkIdx = base.schema.fieldIndex("__rk")
-    val rdd = if (assumeDeterministic) base.rdd else base.rdd.localCheckpoint()
-    // census: per-partition count per stratum (strata are contiguous in
-    // the sort, so each partition holds a handful of distinct values)
-    val partCounts = rdd.mapPartitionsWithIndex { (i, it) =>
-      val m = scala.collection.mutable.LinkedHashMap.empty[Any, Long]
-      it.foreach { r => val s = r.get(sIdx); m.update(s, m.getOrElse(s, 0L) + 1L) }
-      Iterator((i, m.toSeq))
-    }.collect().sortBy(_._1).map(_._2)
-    // prefix offsets: rows of each stratum in partitions before i
-    val running = scala.collection.mutable.HashMap.empty[Any, Long]
-    val offsets: Array[Map[Any, Long]] = partCounts.map { counts =>
-      val snapshot = counts.map { case (s, _) => s -> running.getOrElse(s, 0L) }.toMap
-      counts.foreach { case (s, n) => running.update(s, running.getOrElse(s, 0L) + n) }
-      snapshot
-    }
-    val capB = cap
-    val kept = rdd.mapPartitionsWithIndex { (i, it) =>
-      // the census lists every stratum in this partition — if all are
-      // already past the cap, skip the partition without reading rows
-      if (offsets(i).nonEmpty && offsets(i).values.forall(_ >= capB))
-        Iterator.empty
-      else {
-      val rank = scala.collection.mutable.HashMap.empty[Any, Long]
-      offsets(i).foreach { case (s, o) => rank.update(s, o) }
-      it.flatMap { r =>
-        val s = r.get(sIdx)
-        val next = rank.getOrElse(s, 0L) + 1L
-        rank.update(s, next)
-        if (next <= capB) {
-          val vals = r.toSeq.zipWithIndex.filter(_._2 != rkIdx).map(_._1)
-          Some(Row.fromSeq(vals :+ next))
-        } else None
-      }
-      }
-    }
-    val outSchema = StructType(
-      base.schema.fields.filterNot(_.name == "__rk") :+
-        StructField("stratum_rank", LongType, nullable = false))
-    spark.createDataFrame(kept, outSchema)
+    graft.api.MSTable.runningTotals(sorted, Seq(None -> "stratum_rank"),
+        runKey = Some(stratumCol), pin = !assumeDeterministic,
+        skipAbove = Some(cap))
+      .filter(col("stratum_rank") <= cap)
+      .drop("__rk")
   }
 
   /** Deterministic PROPORTIONAL INTERLEAVE of strata — the training-order
@@ -887,8 +838,8 @@ object Sampling {
     * partitions, never a one-task-per-stratum window); stratum sizes are
     * an O(strata) aggregate broadcast back; the final order is one
     * range-partitioned sort on the position key, and the position ids
-    * are the same census-offset zip the deterministic shuffle uses — no
-    * single-task stage anywhere.
+    * come from the same [[graft.api.MSTable.zipWithRowId]] the
+    * deterministic shuffle uses — no single-task stage anywhere.
     */
   def interleaveStrata(df: DataFrame, keyCol: String, stratumCol: String,
                        assumeDeterministic: Boolean = false): DataFrame = {
@@ -902,8 +853,8 @@ object Sampling {
   /** [[interleaveStrata]] up to (and including) the mixing-position sort,
     * before position ids are zipped on — the stage whose physical plan
     * carries the scale contract (broadcast sizes join, range sort, no
-    * per-stratum window), exposed so the plan audit can see it (the zip's
-    * RDD boundary truncates the final frame's visible plan).
+    * per-stratum window), exposed so the plan audit can see it (the
+    * zip's census boundary truncates the final frame's visible plan).
     */
   private[graft] def interleaveSorted(df: DataFrame, keyCol: String,
                                       stratumCol: String,
@@ -1040,54 +991,28 @@ object Sampling {
     * of corpus assembly.
     *
     * Scale shape: one range-partitioned sort exchange on (priority, key) —
-    * no single-task global window. The running total comes from a
-    * per-partition census (token sum per partition, a tiny collect) whose
-    * prefix sums seed each partition's local scan; partitions whose offset
-    * already exceeds the budget emit nothing without reading rows.
-    *
-    * The sorted frame is evaluated by TWO jobs (census + emit); it is
-    * pinned with `localCheckpoint` before the census so a
-    * nondeterministic upstream cannot desync them — and so the sort runs
-    * once, not twice, at scale. `assumeDeterministic = true` skips the pin
-    * when the input is a plain deterministic scan (see
-    * [[deterministicShuffle]] for the pin's executor-loss failure mode).
-    * Null token counts select as 0 tokens; negative token counts fail the
-    * census loudly (they would silently corrupt the running total).
+    * no single-task global window — then
+    * [[graft.api.MSTable.runningTotals]]: a per-partition token-sum census
+    * (a tiny collect) seeds each partition's local running total, and
+    * partitions whose offset already exceeds the budget emit nothing
+    * without reading rows. The sorted frame is pinned across census +
+    * emit; `assumeDeterministic = true` skips the pin (see
+    * [[deterministicShuffle]]). Null token counts select as 0 tokens;
+    * negative token counts fail the census loudly (they would silently
+    * corrupt the running total).
     */
   def selectTokenBudget(df: DataFrame, keyCol: String, priority: Column,
                         tokens: Column, budget: Long,
                         assumeDeterministic: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
     requireFreeColumns(df, Seq("__nt", "n_tokens", "cum_tokens"),
       "selectTokenBudget")
-    val spark = df.sparkSession
-    val base = df
+    val sorted = df
       .withColumn("__nt", coalesce(tokens.cast("long"), lit(0L)))
       .orderBy(priority.desc, col(keyCol))
-    val ntIdx = base.schema.fieldIndex("__nt")
-    val rdd = if (assumeDeterministic) base.rdd else base.rdd.localCheckpoint()
-    val partSums = rdd.mapPartitionsWithIndex { (i, it) =>
-      var s = 0L
-      it.foreach { r =>
-        val nt = r.getLong(ntIdx)
-        require(nt >= 0, s"selectTokenBudget: negative token count $nt")
-        s += nt
-      }
-      Iterator((i, s))
-    }.collect().sortBy(_._1).map(_._2)
-    val offsets = partSums.scanLeft(0L)(_ + _)
-    val selected = rdd.mapPartitionsWithIndex { (i, it) =>
-      var cum = offsets(i)
-      if (cum >= budget) Iterator.empty
-      else it.flatMap { r =>
-        cum += r.getLong(ntIdx)
-        if (cum <= budget) Some(Row.fromSeq(r.toSeq :+ cum)) else None
-      }
-    }
-    val schema = StructType(base.schema.fields :+
-      StructField("cum_tokens", LongType, nullable = false))
-    spark.createDataFrame(selected, schema)
+    graft.api.MSTable.runningTotals(sorted, Seq(Some("__nt") -> "cum_tokens"),
+        pin = !assumeDeterministic, skipAbove = Some(budget),
+        negativeError = Some("selectTokenBudget: negative token count"))
+      .filter(col("cum_tokens") <= budget)
       .withColumnRenamed("__nt", "n_tokens")
   }
 }

@@ -513,38 +513,6 @@ object TextAnalysis {
         round(col("tfidf"), 9).as("tfidf"))
   }
 
-  /** Token-distribution entropy per document: H = −Σ p·ln p over the word
-    * frequency distribution (computed by the identity
-    * H = ln N − (Σ tf·ln tf)/N, which both Spark and any SQL engine
-    * reproduce), plus the normalized form H/ln(n_distinct) in [0,1] — a
-    * cheap perplexity proxy: low entropy = repetitive/templated text,
-    * high = diverse vocabulary. Documents with no tokens produce no row.
-    *
-    * Scale shape: explode → (doc, token) hash-agg → per-doc hash-agg (the
-    * tfidf shape) — shuffles keyed by (doc, token) then doc, no all-to-all
-    * token exchange, both aggregates map-side combined.
-    */
-  def wordEntropy(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val terms = docs
-      .select(col(idCol), explode(tokens(col(textCol))).as("token"))
-      .filter(length(col("token")) > 0)
-      .groupBy(col(idCol), col("token")).agg(count(lit(1)).as("tf"))
-    terms.groupBy(col(idCol)).agg(
-        sum(col("tf")).as("n_tokens"),
-        count(lit(1)).as("n_distinct"),
-        sum(col("tf").cast("double") * log(col("tf").cast("double"))).as("__stl"))
-      .withColumn("entropy",
-        log(col("n_tokens").cast("double")) -
-          col("__stl") / col("n_tokens").cast("double"))
-      .withColumn("norm_entropy",
-        when(col("n_distinct") <= 1, lit(0d))
-          .otherwise(col("entropy") / log(col("n_distinct").cast("double"))))
-      .select(col(idCol), col("n_tokens"), col("n_distinct"),
-        round(col("entropy"), 9).as("entropy"),
-        round(col("norm_entropy"), 9).as("norm_entropy"))
-  }
-
-  /** Full analysis frame over a documents table. */
   // ------------------------------------------------------------- retrieval
 
   /** BM25 (Okapi, Lucene's idf form: ln(1 + (N−df+0.5)/(df+0.5))) scores

@@ -25,7 +25,7 @@ import org.apache.spark.util.SerializableConfiguration
   * complex struct(re, im) → `<c16`, fixed-shape (nested) arrays of those;
   * C order, little-endian, zlib. Rows land in the store in the frame's
   * current order (make it deterministic upstream if ROWID stability
-  * matters — same caveat as MSTable.zipWithRowId).
+  * matters: a zarr read numbers rows in store order).
   */
 object ZarrWrite {
 

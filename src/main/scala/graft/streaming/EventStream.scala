@@ -38,16 +38,6 @@ object EventStream {
     normalizeTs(spark.read.parquet(s"$dir/events.parquet"))
   }
 
-  /** Open the events table as a file stream (one-file-per-trigger
-    * configurable by the caller via options on a real deployment), with
-    * `ts` normalized identically to the batch loader.
-    */
-  def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    normalizeTs(spark.readStream.schema(schema).parquet(s"$dir/events.parquet"))
-  }
-
   /** Tumbling-window counts/sums per event_type with a watermark for state
     * eviction — the canonical streaming aggregation. Works on batch frames
     * too (window() is the same expression).

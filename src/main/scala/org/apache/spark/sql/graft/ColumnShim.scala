@@ -1,11 +1,15 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.types.StructType
 
-/** Spark 4 bridges: `Column` ↔ Catalyst `Expression`, and [[persistRows]].
+/** Spark 4 bridges: `Column` ↔ Catalyst `Expression`, [[persistRows]]
+  * and [[mapRows]].
   *
   * Spark 4 moved `new Column(expr)` / `col.expr` behind
   * `org.apache.spark.sql.classic.ExpressionUtils`, which is `private[sql]`.
@@ -46,5 +50,15 @@ object ColumnShim {
     val rows = ds.queryExecution.toRdd.map(_.copy())
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     Dataset.ofRows(ds.sparkSession, LogicalRDD.fromDataset(rows, ds, ds.isStreaming))
+  }
+
+  /** The frame over `f(rows)`, where `rows` is `df`'s planned execution
+    * as Catalyst rows (`queryExecution.toRdd`, so no `Row` conversion)
+    * and `f` returns rows laid out as `schema`.
+    */
+  def mapRows(df: DataFrame, schema: StructType)(
+      f: RDD[InternalRow] => RDD[InternalRow]): DataFrame = {
+    val ds = df.asInstanceOf[Dataset[_]]
+    ds.sparkSession.internalCreateDataFrame(f(ds.queryExecution.toRdd), schema)
   }
 }

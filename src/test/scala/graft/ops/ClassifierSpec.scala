@@ -377,6 +377,38 @@ class ClassifierSpec extends SparkSpec {
     assert(g.getDouble(2) === 91.0 && g.getDouble(4) === 0.91)
   }
 
+  test("boundedPrefix above the cutoff: bit-equal to the sequential strictly-below sum") {
+    import org.apache.spark.sql.expressions.Window
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    // more distinct keys than smallCutoff (4096), ±Inf included, integer
+    // weights with many repeats (a LONG and a DOUBLE column), spread over
+    // several partitions
+    val gen = Gen.zip(Gen.choose(4200, 6000), Gen.choose(4, 9), Gen.choose(0L, 1L << 40))
+    val prop = Prop.forAllNoShrink(gen) { case (n, parts, seed) =>
+      val rnd = new scala.util.Random(seed)
+      val keys = (Seq(Double.NegativeInfinity, Double.PositiveInfinity) ++
+        Seq.fill(n)(rnd.nextGaussian() * 1e3)).distinct
+      val per = keys.map(k => (k, rnd.nextInt(4) * 1000003L, rnd.nextInt(3).toDouble))
+        .toDF("k", "cnt", "nn").repartition(parts)
+      val got = Classifier.boundedPrefix(per, "k",
+        Seq("cnt" -> "below_cnt", "nn" -> "below_nn"), distinctCount = keys.size)
+      val w = Window.orderBy("k").rowsBetween(Window.unboundedPreceding, -1)
+      val want = per.select(col("*"),
+        coalesce(sum(col("cnt").cast("double")).over(w), lit(0.0)).as("below_cnt"),
+        coalesce(sum(col("nn").cast("double")).over(w), lit(0.0)).as("below_nn"))
+      def bits(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
+        (r.getDouble(0), r.getLong(1), r.getDouble(2),
+          java.lang.Double.doubleToRawLongBits(r.getDouble(3)),
+          java.lang.Double.doubleToRawLongBits(r.getDouble(4))))
+        .sortBy(_._1)(Ordering.Double.TotalOrdering).toSeq
+      got.columns.toSeq == want.columns.toSeq &&
+        !got.queryExecution.executedPlan.toString.contains("Window") &&
+        bits(got) == bits(want)
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(3), prop)
+    assert(res.passed, res.status.toString)
+  }
+
   test("rocAuc: hand AUC with ties, perfect/inverted/random, binned mode") {
     import spark.implicits._
     // scores: pos {0.9, 0.7, 0.5}, neg {0.7, 0.3}; pairs = 6:

@@ -310,6 +310,50 @@ class SamplingSpec extends SparkSpec {
       s"selectTokenBudget: ${acc.value / 200.0} input passes, expected <= 2")
   }
 
+  test("census and emit share one partitioning of the sort (many partitions, no pin)") {
+    // Without the pin the census and the emit are two jobs over the sort.
+    // Each execution of an orderBy samples new range boundaries, so a
+    // census taken from a second execution would count other partitions
+    // than the emit numbers. Coalescing is off so the sort keeps all 8
+    // range partitions (AQE would merge 2,000 small rows into one).
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      val n = 2400
+      val ids = (0L until n.toLong).toDF("id").repartition(8)
+      val shuffled = Sampling.deterministicShuffle(ids, "id",
+        assumeDeterministic = true)
+      assert(shuffled.rdd.getNumPartitions >= 8)
+      val pos = shuffled.select("id", "shuffle_pos").as[(Long, Long)]
+        .collect().toMap
+      assert(pos.values.toSeq.sorted === (0L until n.toLong))
+      val md = java.security.MessageDigest.getInstance("MD5")
+      def md5(s: String) = md.digest(s.getBytes("UTF-8"))
+        .map(b => f"${b & 0xff}%02x").mkString
+      val want = (0L until n.toLong).sortBy(i => (md5(s"42:$i"), i))
+        .zipWithIndex.map { case (i, p) => i -> p.toLong }.toMap
+      assert(pos === want)
+
+      // SNM: with every candidate verified (maxDist covers any two
+      // 5-char strings), the pairs are exactly the window-3 neighbours
+      // of the driver-side sort by (name, id)
+      val names = (0 until n).map(i => i.toLong -> f"${(i * 7919) % n}%05d")
+      val pairs = Fuzzy.sortedNeighborhoodPairs(
+          names.toDF("id", "name").repartition(8), "name", "id",
+          window = 3, maxDist = 5, assumeDeterministic = true)
+        .select("id_a", "id_b").as[(Long, Long)].collect()
+      val order = names.sortBy(t => (t._2, t._1)).map(_._1)
+      val wantPairs = (1 to 2).flatMap(d => order.zip(order.drop(d)))
+        .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
+      assert(pairs.length === wantPairs.length)
+      assert(pairs.toSet === wantPairs.toSet)
+    } finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("sampling ops fail fast when the input already has a reserved column") {
     val clash = Seq((1L, 2L)).toDF("id", "shuffle_pos")
     val e = intercept[IllegalArgumentException](
